@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from anomaly_detection_spark.functions.pairs import cap_blocks
 from anomaly_detection_spark.functions.text import tokens
 
 
@@ -98,15 +99,6 @@ def with_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     if keep_token_count:
         cols.append(F.size("_toks").alias("_n_toks"))
     return step1.select(*cols)
-
-
-def minhash_col(col: Column | str, seed: int, n: int = 3) -> Column:
-    """One MinHash value: lexicographic min of md5('<seed>:' || shingle).
-    md5 output is uniform ⇒ min over hex strings is a proper min-hash."""
-    sh = shingles(col, n)
-    return F.array_min(
-        F.transform(sh, lambda s: F.md5(F.concat(F.lit(f"{seed}:"), s)))
-    )
 
 
 def minhash_signature(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -193,14 +185,8 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
     broadcast anti-join against the tiny oversize-bucket set) so a degenerate
     bucket never materializes its full id list in one ``collect_list`` row —
     capping after collection would still OOM on the row it exists to kill."""
-    bkts = _band_buckets(df, text_col, id_col, k, bands, n)
-    if max_bucket is not None:
-        oversize = (
-            bkts.groupBy("bucket").agg(F.count("*").alias("_sz"))
-            .filter(F.col("_sz") > max_bucket)
-            .select("bucket")
-        )
-        bkts = bkts.join(F.broadcast(oversize), "bucket", "left_anti")
+    bkts = cap_blocks(_band_buckets(df, text_col, id_col, k, bands, n),
+                      "bucket", max_bucket)
     grouped = (
         bkts.groupBy("bucket")
         .agg(F.collect_list(id_col).alias("_ids"))
@@ -266,28 +252,21 @@ def incremental_lsh_candidates(corpus_buckets: DataFrame, appended: DataFrame,
     distinct pairs. Same-id pairs are possible only if the commit rewrites
     an existing doc_id — by the appends-only contract ids are fresh.
     Verify candidates with ``ngram_jaccard_pairs`` as usual."""
-    new_bkts = _band_buckets(appended, text_col, id_col, k, bands, n) \
-        .select(F.col(id_col).alias("new_id"), "bucket")
-    if max_bucket is not None:
-        over_new = (
-            new_bkts.groupBy("bucket").agg(F.count(F.lit(1)).alias("_sz"))
-            .filter(F.col("_sz") > max_bucket).select("bucket")
-        )
-        new_bkts = new_bkts.join(F.broadcast(over_new), "bucket", "left_anti")
-    has_sz = "bucket_sz" in corpus_buckets.columns
-    if has_sz and max_bucket is not None:
-        probe = corpus_buckets.filter(F.col("bucket_sz") <= max_bucket) \
-            .select(F.col(id_col).alias("corpus_id"), "bucket")
-    else:
-        probe = corpus_buckets.select(F.col(id_col).alias("corpus_id"), "bucket")
-    if max_bucket is not None and not has_sz:
-        new_set = new_bkts.select("bucket").distinct()
-        over_corpus = (
-            corpus_buckets.join(F.broadcast(new_set), "bucket")
-            .groupBy("bucket").agg(F.count(F.lit(1)).alias("_sz"))
-            .filter(F.col("_sz") > max_bucket).select("bucket")
-        )
-        probe = probe.join(F.broadcast(over_corpus), "bucket", "left_anti")
+    new_bkts = cap_blocks(
+        _band_buckets(appended, text_col, id_col, k, bands, n)
+        .select(F.col(id_col).alias("new_id"), "bucket"),
+        "bucket", max_bucket)
+    probe = corpus_buckets
+    if max_bucket is not None and "bucket_sz" in corpus_buckets.columns:
+        probe = probe.filter(F.col("bucket_sz") <= max_bucket)
+    probe = probe.select(F.col(id_col).alias("corpus_id"), "bucket")
+    if max_bucket is not None and "bucket_sz" not in corpus_buckets.columns:
+        # the final join keeps only commit buckets, so restrict to them
+        # first and count just those corpus blocks
+        probe = cap_blocks(
+            probe.join(F.broadcast(new_bkts.select("bucket").distinct()),
+                       "bucket"),
+            "bucket", max_bucket)
     return (
         probe.join(F.broadcast(new_bkts), "bucket")
         .groupBy("new_id", "corpus_id")
@@ -296,20 +275,6 @@ def incremental_lsh_candidates(corpus_buckets: DataFrame, appended: DataFrame,
 
 
 # ---------------------------------------------------------------- simhash
-
-def simhash_hex16(col: Column | str, n: int = 1) -> Column:
-    """16-bit SimHash as a bit string, one bit per hex position of each
-    token's md5: bit_i = majority over tokens of (hexdigit_i >= 8).
-
-    Column form for one-off use; hot paths should use
-    ``simhash_fingerprints`` (bound hash list, no re-tokenization per bit).
-    A compact locality-sensitive fingerprint: near-identical token multisets
-    yield identical or near-identical fingerprints. Expressed entirely with
-    string ops so the DuckDB oracle can reproduce it bit-for-bit."""
-    sh = shingles(col, n) if n > 1 else tokens(col)
-    hashes = F.transform(sh, lambda s: F.md5(s))
-    return _simhash_bits(hashes)
-
 
 def _simhash_bits(hashes: Column) -> Column:
     bits = []
@@ -362,12 +327,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
         (F.col("_n_toks") / 10).cast("long").alias("_blk"),
     )
     if candidates is None:
-        oversize = (
-            sets.groupBy("_blk").agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") > max_block)
-            .select("_blk")
-        )
-        kept = sets.join(F.broadcast(oversize), "_blk", "left_anti")
+        kept = cap_blocks(sets, "_blk", max_block)
         a = kept.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a"), "_blk")
         b = kept.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b"), "_blk")
         pairs = a.join(b, "_blk").filter(F.col("id_a") < F.col("id_b"))
@@ -411,11 +371,7 @@ def ngram_containment_pairs(df: DataFrame, text_col: str = "text",
     screens; containment generalizes them to partial inclusion."""
     base = with_shingles(df, text_col, id_col, n=n, distinct=True)
     ex = base.select(F.col(id_col).alias("_id"), F.explode("_sh").alias("_g"))
-    over = (
-        ex.groupBy("_g").agg(F.count(F.lit(1)).alias("_df"))
-        .filter(F.col("_df") > int(max_df)).select("_g")
-    )
-    kept = ex.join(F.broadcast(over), "_g", "left_anti")
+    kept = cap_blocks(ex, "_g", int(max_df))
     cand = (
         kept.select(F.col("_id").alias("id_a"), "_g")
         .join(kept.select(F.col("_id").alias("id_b"), "_g"), "_g")

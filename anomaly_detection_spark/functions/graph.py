@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from anomaly_detection_spark.functions.pairs import cap_blocks
+
 
 def bfs_levels(edges: DataFrame, root_id, max_iter: int = 20,
                id_col: str = "id", parent_col: str = "parent") -> DataFrame:
@@ -76,12 +78,7 @@ def co_activity_pairs(df: DataFrame, entity_col: str, key_cols: list[str],
     max co-activity for exact results; the default bounds worst-case pair
     expansion at cap²·n_keys."""
     keyed = df.select(F.col(entity_col).alias("_e"), *key_cols).distinct()
-    oversize = (
-        keyed.groupBy(*key_cols).agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") > max_entities_per_key)
-        .select(*key_cols)
-    )
-    kept = keyed.join(F.broadcast(oversize), key_cols, "left_anti")
+    kept = cap_blocks(keyed, key_cols, max_entities_per_key)
     a = kept.select(F.col("_e").alias("entity_a"), *key_cols)
     b = kept.select(F.col("_e").alias("entity_b"), *key_cols)
     return (
@@ -587,12 +584,7 @@ def exact_betweenness(edges: DataFrame, max_component: int = 5_000,
     import pandas as pd
 
     comp = connected_components(edges, max_iter=max_iter)
-    oversize = (
-        comp.groupBy("component").agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") > max_component)
-        .select("component")
-    )
-    kept = comp.join(F.broadcast(oversize), "component", "left_anti")
+    kept = cap_blocks(comp, "component", max_component)
     sym = _sym(edges)
     e = (
         sym.join(kept, "node")

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from anomaly_detection_spark.functions.pairs import cap_blocks, topk_per_query
+
 
 def char_bigrams(col: F.Column) -> F.Column:
     """Distinct lowercase character 2-grams of a string — the similarity
@@ -70,9 +72,7 @@ def best_links(
     un-linkable at bounded cost — reported upstream as a coverage metric,
     same trade as the LSH ``max_bucket``)."""
     blk = [F.col(c) for c in block_cols]
-    csize = clean.groupBy(*block_cols).agg(F.count("*").alias("_bn"))
-    c_ok = clean.join(F.broadcast(csize.filter(F.col("_bn") <= max_block)),
-                      block_cols).drop("_bn")
+    c_ok = cap_blocks(clean, block_cols, max_block)
 
     d = dirty.select(
         F.col("rec_id").alias("dirty_id"),
@@ -88,15 +88,9 @@ def best_links(
         "dirty_id", "clean_id",
         jaccard_ppm(F.col("d_bg"), F.col("c_bg")).alias("jacc_ppm"),
     ).filter(F.col("jacc_ppm") >= min_ppm)
-
-    w = Window.partitionBy("dirty_id").orderBy(
-        F.col("jacc_ppm").desc(), F.col("clean_id").asc()
-    )
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("dirty_id", "clean_id", "jacc_ppm")
-    )
+    return topk_per_query(
+        pairs, 1, query="dirty_id", neighbor="clean_id", score="jacc_ppm",
+    ).select("dirty_id", "clean_id", "jacc_ppm")
 
 
 def golden_records(records: DataFrame, cluster_col: str,

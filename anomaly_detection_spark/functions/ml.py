@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from anomaly_detection_spark.functions.pairs import cap_blocks
+
 MAD_CONSISTENCY = 1.4826  # scales MAD to σ under normality (standard constant)
 
 
@@ -166,12 +168,7 @@ def dbscan_labels(
         F.col(id_col).alias("_id"), F.col(bucket_col).alias("_bkt"),
         F.col(vec_col).alias("_v"),
     ).localCheckpoint(eager=False)
-    oversize = (
-        pts.groupBy("_bkt").agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") > max_bucket)
-        .select("_bkt")
-    )
-    kept = pts.join(F.broadcast(oversize), "_bkt", "left_anti")
+    kept = cap_blocks(pts, "_bkt", max_bucket)
     a = kept.select(F.col("_id").alias("_pa"), "_bkt", F.col("_v").alias("_va"))
     b = kept.select(F.col("_id").alias("_pb"), "_bkt", F.col("_v").alias("_vb"))
     d2 = F.aggregate(
@@ -298,12 +295,7 @@ def local_outlier_scores(
         F.col(id_col).alias("_id"), F.col(bucket_col).alias("_bkt"), *cols
     )
     pts = _ckpt(pts)
-    oversize = (
-        pts.groupBy("_bkt").agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") > max_bucket)
-        .select("_bkt")
-    )
-    kept = pts.join(F.broadcast(oversize), "_bkt", "left_anti")
+    kept = cap_blocks(pts, "_bkt", max_bucket)
     probed = kept
     if nprobe > 1:
         cent = kept.groupBy(F.col("_bkt").alias("_cb")).agg(

@@ -27,9 +27,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from anomaly_detection_spark.functions import text
+from anomaly_detection_spark.functions.pairs import topk_per_query
 
 
 def bm25_topk(
@@ -103,11 +103,6 @@ def bm25_topk(
         .groupBy("query_id", "doc_id")
         .agg(F.sum("c").alias("score_micro"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_micro").desc(), F.col("doc_id").asc()
-    )
-    return (
-        per_doc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score_micro")
-    )
+    return topk_per_query(
+        per_doc, k, neighbor="doc_id", score="score_micro",
+    ).select("query_id", "rank", "doc_id", "score_micro")

@@ -15,6 +15,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from anomaly_detection_spark.functions.pairs import cap_blocks, topk_per_query
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ via zip_with + aggregate — runs in codegen, double precision."""
@@ -29,6 +31,26 @@ def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(
         a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
     ))
+
+
+def idot(a: Column | str, b: Column | str) -> Column:
+    """Integer twin of ``dot`` over quantized ``array<long>`` vectors —
+    exact int64, so every engine agrees bit-for-bit."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
+                       F.lit(0).cast("long"), lambda acc, x: acc + x)
+
+
+def inorm(a: Column | str) -> Column:
+    """Integer SQUARED norm Σ aᵢ² (no sqrt — callers take it in double
+    at the cosine close, once per vector, never per pair)."""
+    return F.aggregate(a, F.lit(0).cast("long"), lambda acc, x: acc + x * x)
+
+
+def nonzero(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
+    """Rows whose vector has a non-zero component — int8 quantization and
+    cosine are undefined for the zero vector."""
+    return emb.filter(F.array_max(F.transform(
+        F.col(vec_col), lambda v: F.abs(v.cast("double")))) > 0)
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -50,41 +72,30 @@ def brute_force_topk(
     c = emb.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
     ).withColumn("cn", norm(F.col("cv")))
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id", "neighbor_id",
-            F.round(
-                dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _cos_topk(q.crossJoin(c), k)
 
 
-def _cap_cells(e: DataFrame, bucket_col: str,
-               max_bucket: int | None) -> DataFrame:
-    """Oversize-cell PREFILTER — the ``dedup.lsh_candidate_pairs``
-    discipline applied to the ANN cell joins: a map-side-combinable count
-    finds cells above ``max_bucket``, then a broadcast anti-join drops
-    their rows BEFORE any per-cell join materializes. Cells here are
-    data-given labels, not a balanced codebook, so one skewed cell at
-    100 TB would otherwise make the candidate join Σ|cell|² unbounded.
-    Pair with ``ivf_cell_stats`` to log what was dropped (a silent cap
-    reads as full coverage). ``None`` opts out."""
-    if max_bucket is None:
-        return e
-    oversize = (
-        e.groupBy(bucket_col).agg(F.count("*").alias("_sz"))
-        .filter(F.col("_sz") > max_bucket)
-        .select(bucket_col)
-    )
-    return e.join(F.broadcast(oversize), bucket_col, "left_anti")
+def _cos_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Top-k of the self-excluded FLOAT cosine of query/candidate pairs
+    (``qv``/``qn``, ``cv``/``cn``), rounded to 6 dp BEFORE ranking."""
+    scored = pairs.filter(F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id", "neighbor_id",
+        F.round(dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
+                6).alias("cos"))
+    return topk_per_query(scored, k)
+
+
+def _icos_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Top-k of the self-excluded INTEGER cosine of quantized pairs
+    (``qv``/``qn`` and ``cv``/``cn`` from ``inorm``): ranked unrounded,
+    rounded to 6 dp on output."""
+    scored = pairs.filter(F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id", "neighbor_id",
+        (idot("qv", "cv").cast("double")
+         / F.sqrt(F.col("qn").cast("double") * F.col("cn").cast("double"))
+         ).alias("cos_x"))
+    return topk_per_query(scored, k, score="cos_x").select(
+        "query_id", "neighbor_id", F.round("cos_x", 6).alias("cos"), "rank")
 
 
 def ivf_cell_stats(emb: DataFrame, bucket_col: str = "label",
@@ -117,7 +128,7 @@ def ivf_topk(
     cells entirely — queries probe only their home cell here, so a
     dropped cell's members emit no rows (the LSH-bucket drop semantics);
     log the drop with ``ivf_cell_stats``."""
-    capped = _cap_cells(
+    capped = cap_blocks(
         emb.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"),
                    F.col(bucket_col).alias("_b")),
         "_b", max_bucket)
@@ -125,18 +136,7 @@ def ivf_topk(
                       "_b").withColumn("qn", norm(F.col("qv")))
     c = capped.select(F.col("_id").alias("neighbor_id"), F.col("_v").alias("cv"),
                       "_b").withColumn("cn", norm(F.col("cv")))
-    scored = (
-        q.join(c, "_b")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id", "neighbor_id",
-            F.round(
-                dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _cos_topk(q.join(c, "_b"), k)
 
 
 def lsh_multiprobe_topk(
@@ -177,18 +177,7 @@ def lsh_multiprobe_topk(
         F.col("_id").alias("neighbor_id"), F.col("_v").alias("cv"),
         F.col("_b0").alias("_b"),
     ).withColumn("cn", norm(F.col("cv")))
-    scored = (
-        q.join(c, "_b")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id", "neighbor_id",
-            F.round(
-                dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _cos_topk(q.join(c, "_b"), k)
 
 
 def ivf_multiprobe_topk(
@@ -251,10 +240,7 @@ def int8_ivf_topk(
     by the parity test, not assumed). Zero vectors are excluded (int8
     quantization is undefined for them), matching ``int8_quantize``'s
     contract."""
-    nonzero = emb.filter(
-        F.array_max(F.transform(
-            F.col(vec_col), lambda v: F.abs(v.cast("double")))) > 0)
-    e = nonzero.select(
+    e = nonzero(emb, vec_col).select(
         F.col(id_col).alias("_id"),
         int8_quantize(F.col(vec_col)).alias("_v"),
         F.col(bucket_col).alias("_b"),
@@ -275,7 +261,10 @@ def ann_recall(truth: DataFrame, variant: DataFrame, name: str) -> DataFrame:
     pair-key left join here is against a tiny frame; the variant side is
     the ANN output already restricted to the same sample."""
     t = truth.select("query_id", "neighbor_id")
-    v = variant.select("query_id", "neighbor_id").withColumn("_hit", F.lit(1))
+    # one hit per distinct pair: a variant repeating a pair must not
+    # multiply the truth row it matches
+    v = variant.select("query_id", "neighbor_id") \
+        .dropDuplicates(["query_id", "neighbor_id"]).withColumn("_hit", F.lit(1))
     j = t.join(v, ["query_id", "neighbor_id"], "left")
     return j.agg(
         F.countDistinct("query_id").alias("n_queries"),
@@ -313,18 +302,16 @@ def ivf_kmeans_topk(
     Zero vectors are excluded per ``int8_quantize``'s contract."""
     from anomaly_detection_spark.functions import clustering
 
-    nonzero = emb.filter(
-        F.array_max(F.transform(
-            F.col(vec_col), lambda v: F.abs(v.cast("double")))) > 0)
+    nz = nonzero(emb, vec_col)
     _, centroids = clustering.kmeans(
-        nonzero, k=n_clusters, n_iters=n_iters,
+        nz, k=n_clusters, n_iters=n_iters,
         id_col=id_col, vec_col=vec_col)
     if not centroids:
-        empty = nonzero.sparkSession.range(0)
+        empty = nz.sparkSession.range(0)
         return empty.select(
             F.col("id").alias("query_id"), F.col("id").alias("neighbor_id"),
             F.lit(0.0).alias("cos"), F.lit(0).cast("int").alias("rank"))
-    pts = nonzero.select(
+    pts = nz.select(
         F.col(id_col).alias("_id"),
         int8_quantize(F.col(vec_col)).alias("_v"),
     ).withColumn("_sv", F.transform("_v", lambda q: q + F.lit(127)))
@@ -341,7 +328,7 @@ def _ivf_multiprobe_quantized(
     ``(_id, _v array<long>, _b)`` — see ``ivf_multiprobe_topk`` for the
     plan-shape contract (broadcast integer codebook, per-bucket join).
 
-    ``max_bucket`` applies the ``_cap_cells`` oversize prefilter to the
+    ``max_bucket`` applies the ``pairs.cap_blocks`` oversize prefilter to the
     INDEX side only: codebook and candidates come from cells ≤ the cap
     (Σ|cell|² bounded by n·nprobe·max_bucket), while every query still
     probes its ``nprobe`` nearest KEPT cells — a member of a dropped
@@ -358,7 +345,7 @@ def _ivf_multiprobe_quantized(
     (quantize-on-write; a production table reads int8 directly and this
     checkpoint is the scan)."""
     e = e.localCheckpoint(eager=False)
-    idx = _cap_cells(e, "_b", max_bucket)
+    idx = cap_blocks(e, "_b", max_bucket)
     # codebook: exact per-dim int sums as ONE wide hash aggregate — dim
     # sum(element_at(_v, i)) columns re-assembled into an array.  This
     # keeps one row per bucket per map task (map-side combine), versus
@@ -399,31 +386,10 @@ def _ivf_multiprobe_quantized(
         .filter(F.col("_pr") <= nprobe)
         .select("query_id", "qv", "_b")
     )
-    inrm = lambda col: F.aggregate(  # noqa: E731
-        col, F.lit(0).cast("long"), lambda a, x: a + x * x)
-    q = probed.withColumn("qn", inrm(F.col("qv")))
+    q = probed.withColumn("qn", inorm("qv"))
     c = idx.select(F.col("_id").alias("neighbor_id"), F.col("_v").alias("cv"),
-                   "_b").withColumn("cn", inrm(F.col("cv")))
-    idot = F.aggregate(
-        F.zip_with("qv", "cv", lambda a, b: a * b),
-        F.lit(0).cast("long"), lambda a, x: a + x,
-    )
-    scored = (
-        q.join(c, "_b")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id", "neighbor_id",
-            (idot.cast("double")
-             / F.sqrt(F.col("qn").cast("double") * F.col("cn").cast("double"))
-             ).alias("cos_x"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_x"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos_x", 6).alias("cos"), "rank")
-    )
+                   "_b").withColumn("cn", inorm("cv"))
+    return _icos_topk(q.join(c, "_b"), k)
 
 
 def near_dup_pairs(
@@ -525,26 +491,17 @@ def semantic_prune(
     """
     qz = F.transform(F.col(vec_col),
                      lambda x: F.round(x.cast("double") * scale).cast("long"))
-    inrm = lambda col: F.aggregate(  # noqa: E731
-        col, F.lit(0).cast("long"), lambda a, x: a + x * x)
     e = emb.select(
         F.col(id_col).alias("_id"), qz.alias("_v"),
         F.col(bucket_col).alias("_b"),
-    ).withColumn("_n", inrm(F.col("_v")))
-    sizes = e.groupBy("_b").agg(F.count(F.lit(1)).alias("_bn"))
-    bounded = e.join(
-        F.broadcast(sizes.filter(F.col("_bn") <= max_bucket).select("_b")), "_b"
-    )
+    ).withColumn("_n", inorm("_v"))
+    bounded = cap_blocks(e, "_b", max_bucket)
     u = bounded.select(F.col("_b"), F.col("_id").alias("u_id"),
                        F.col("_v").alias("uv"), F.col("_n").alias("un"))
     v = bounded.select(F.col("_b"), F.col("_id").alias("v_id"),
                        F.col("_v").alias("vv"), F.col("_n").alias("vn"))
-    idot = F.aggregate(
-        F.zip_with("uv", "vv", lambda a, b: a * b),
-        F.lit(0).cast("long"), lambda a, x: a + x,
-    )
     cos6 = F.round(
-        idot.cast("double")
+        idot("uv", "vv").cast("double")
         / F.sqrt(F.col("un").cast("double") * F.col("vn").cast("double")),
         6,
     )
@@ -624,27 +581,19 @@ def contrastive_pairs(
 
     Returns (query_id, pos_id, pos_cos_micro, neg_id, neg_cos_micro,
     margin_micro) with margin NULL whenever either side is."""
-    nonzero = emb.filter(
-        F.array_max(F.transform(
-            F.col(vec_col), lambda v: F.abs(v.cast("double")))) > 0)
-    nrm = lambda col: F.aggregate(  # noqa: E731
-        col, F.lit(0).cast("long"), lambda a, x: a + x * x)
-    base = nonzero.select(
+    base = nonzero(emb, vec_col).select(
         F.col(id_col).alias("_id"), F.col(label_col).alias("_lbl"),
         int8_quantize(F.col(vec_col)).alias("_v"),
         lsh_sign_bucket(F.col(vec_col), n_planes, dim).alias("_b"),
-    ).withColumn("_nn", nrm(F.col("_v")))
+    ).withColumn("_nn", inorm("_v"))
     a = base.select(F.col("_id").alias("query_id"),
                     F.col("_lbl").alias("_la"), F.col("_v").alias("qv"),
                     F.col("_nn").alias("qn"), "_b")
     c = base.select(F.col("_id").alias("neighbor_id"),
                     F.col("_lbl").alias("_lc"), F.col("_v").alias("cv"),
                     F.col("_nn").alias("cn"), "_b")
-    idot = F.aggregate(
-        F.zip_with("qv", "cv", lambda x, y: x * y),
-        F.lit(0).cast("long"), lambda acc, x: acc + x)
     cos_micro = F.floor(
-        idot.cast("double")
+        idot("qv", "cv").cast("double")
         / (F.sqrt(F.col("qn").cast("double"))
            * F.sqrt(F.col("cn").cast("double")))
         * F.lit(1e6) + F.lit(0.5)).cast("long")
@@ -655,10 +604,7 @@ def contrastive_pairs(
                 (F.col("_la") == F.col("_lc")).alias("_same"),
                 cos_micro.alias("_cm"))
     )
-    w = Window.partitionBy("query_id", "_same").orderBy(
-        F.desc("_cm"), F.asc("neighbor_id"))
-    top = scored.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") == 1)
+    top = topk_per_query(scored, 1, query=["query_id", "_same"], score="_cm")
     pos = top.filter(F.col("_same")).select(
         "query_id", F.col("neighbor_id").alias("pos_id"),
         F.col("_cm").alias("pos_cos_micro"))
@@ -692,27 +638,19 @@ def knn_label_noise(
 
     Returns (vec_id, label, n_neighbors, n_disagree, disagree_ppm,
     noisy) ordered by disagreement."""
-    nonzero = emb.filter(
-        F.array_max(F.transform(
-            F.col(vec_col), lambda v: F.abs(v.cast("double")))) > 0)
-    nrm = lambda col: F.aggregate(  # noqa: E731
-        col, F.lit(0).cast("long"), lambda a, x: a + x * x)
-    base = nonzero.select(
+    base = nonzero(emb, vec_col).select(
         F.col(id_col).alias("_id"), F.col(label_col).alias("_lbl"),
         int8_quantize(F.col(vec_col)).alias("_v"),
         lsh_sign_bucket(F.col(vec_col), n_planes, dim).alias("_b"),
-    ).withColumn("_nn", nrm(F.col("_v")))
+    ).withColumn("_nn", inorm("_v"))
     a = base.select(F.col("_id").alias("vec_id"),
                     F.col("_lbl").alias("label"), F.col("_v").alias("qv"),
                     F.col("_nn").alias("qn"), "_b")
     c = base.select(F.col("_id").alias("_nid"),
                     F.col("_lbl").alias("_nlbl"), F.col("_v").alias("cv"),
                     F.col("_nn").alias("cn"), "_b")
-    idot = F.aggregate(
-        F.zip_with("qv", "cv", lambda x, y: x * y),
-        F.lit(0).cast("long"), lambda acc, x: acc + x)
     cos_micro = F.floor(
-        idot.cast("double")
+        idot("qv", "cv").cast("double")
         / (F.sqrt(F.col("qn").cast("double"))
            * F.sqrt(F.col("cn").cast("double")))
         * F.lit(1e6) + F.lit(0.5)).cast("long")
@@ -724,9 +662,8 @@ def knn_label_noise(
                 .alias("_dis"),
                 cos_micro.alias("_cm"), "_nid")
     )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("_cm"), F.asc("_nid"))
-    topk = scored.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") <= k)
+    topk = topk_per_query(scored, k, query="vec_id", neighbor="_nid",
+                          score="_cm")
     return (
         topk.groupBy("vec_id", "label")
         .agg(F.count(F.lit(1)).cast("long").alias("n_neighbors"),
@@ -774,10 +711,7 @@ def spectral_top_direction(emb: DataFrame, dim: int = 64,
         F.array(*[F.lit(1).cast("long")] * dim).alias("v"))
     for _ in range(iters):
         joined = q.crossJoin(F.broadcast(v))
-        d = F.aggregate(
-            F.zip_with("_q", "v", lambda a, b: a * b),
-            F.lit(0).cast("long"), lambda acc, x: acc + x)
-        scored = joined.select(d.alias("_d"), "_q")
+        scored = joined.select(idot("_q", "v").alias("_d"), "_q")
         sums = scored.agg(*[
             F.sum(F.col("_d") * F.col("_q")[j]).alias(f"s{j}")
             for j in range(dim)
@@ -834,13 +768,8 @@ def _orthogonalize(vf: DataFrame, pf: DataFrame,
     directions at scale 2^14 the products stay ≤ 2^49 — driver-free,
     corpus-free, long-safe."""
     j = vf.crossJoin(F.broadcast(pf.select(F.col("v").alias("_p"))))
-    mul = lambda a, b: a * b  # noqa: E731
-    add = lambda acc, x: acc + x  # noqa: E731
-    np_ = F.aggregate(F.zip_with("_p", "_p", mul),
-                      F.lit(0).cast("long"), add)
-    vp = F.aggregate(F.zip_with("v", "_p", mul),
-                     F.lit(0).cast("long"), add)
-    t = j.withColumn("_np", np_).withColumn("_vp", vp).select(
+    t = j.withColumn("_np", idot("_p", "_p")).withColumn(
+        "_vp", idot("v", "_p")).select(
         F.zip_with("v", "_p",
                    lambda a, b: a * F.col("_np") - F.col("_vp") * b)
         .alias("_w"))
@@ -882,10 +811,7 @@ def spectral_top_directions(emb: DataFrame, n_components: int = 3,
             F.array(*[F.lit(1).cast("long")] * dim).alias("v"))
         for _ in range(iters):
             joined = q.crossJoin(F.broadcast(v))
-            d = F.aggregate(
-                F.zip_with("_q", "v", lambda a, b: a * b),
-                F.lit(0).cast("long"), lambda acc, x: acc + x)
-            sums = joined.select(d.alias("_d"), "_q").agg(*[
+            sums = joined.select(idot("_q", "v").alias("_d"), "_q").agg(*[
                 F.sum(F.col("_d") * F.col("_q")[j]).alias(f"s{j}")
                 for j in range(dim)
             ]).select(F.array(*[f"s{j}" for j in range(dim)]).alias("_w"))
@@ -909,8 +835,5 @@ def spectral_projections(emb: DataFrame, direction: DataFrame,
     """Each row's integer projection onto a ``spectral_top_direction``
     result: broadcast the 1-row direction, one zip_with dot product per
     row — a pure scan, no shuffle. Appends column ``proj`` (long)."""
-    d = F.aggregate(
-        F.zip_with(vec_col, "v", lambda a, b: a * b),
-        F.lit(0).cast("long"), lambda acc, x: acc + x)
     return emb.crossJoin(F.broadcast(direction)) \
-        .withColumn("proj", d).drop("v")
+        .withColumn("proj", idot(vec_col, "v")).drop("v")

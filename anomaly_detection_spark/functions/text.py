@@ -44,12 +44,6 @@ def stopword_ratio(col: Column | str, stopwords: list[str] | None = None) -> Col
     return hits / F.greatest(F.size(toks), F.lit(1))
 
 
-def mean_word_length(col: Column | str) -> Column:
-    toks = tokens(col)
-    total = F.aggregate(toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t))
-    return total / F.greatest(F.size(toks), F.lit(1))
-
-
 def punct_ratio(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     n_punct = F.length(c) - F.length(F.regexp_replace(c, r"[^\w\s]", ""))

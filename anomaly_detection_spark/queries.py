@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from anomaly_detection_spark.functions import dedup, similarity, text
+from anomaly_detection_spark.functions.pairs import cap_blocks, topk_per_query
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -1898,32 +1899,15 @@ def q_embedding_topk(spark, sf):
     """Brute-force cosine top-5 (ANN baseline) for query vectors vec_id<50,
     quantized components ⇒ exact integer dot products in both engines."""
     emb = load(spark, sf, "embeddings")
-    nrm = lambda col: F.aggregate(col, F.lit(0).cast("long"), lambda a, x: a + x * x)  # noqa: E731
     # norms precomputed per vector (once), not per pair — the pair-level
     # expression is a single dot-product pass over the bound arrays
     q = emb.filter(F.col("vec_id") < 50).select(
         F.col("vec_id").alias("query_id"), _quantize(F.col("embedding")).alias("qv")
-    ).withColumn("qn", nrm(F.col("qv")))
+    ).withColumn("qn", similarity.inorm("qv"))
     c = emb.select(
         F.col("vec_id").alias("neighbor_id"), _quantize(F.col("embedding")).alias("cv")
-    ).withColumn("cn", nrm(F.col("cv")))
-    dot_ = F.aggregate(
-        F.zip_with("qv", "cv", lambda a, b: a * b), F.lit(0).cast("long"), lambda a, x: a + x
-    )
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id", "neighbor_id",
-            (dot_.cast("double") / F.sqrt(F.col("qn").cast("double") * F.col("cn").cast("double"))).alias("cos_x"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_x"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id", F.round("cos_x", 6).alias("cos"), "rank")
-    )
+    ).withColumn("cn", similarity.inorm("cv"))
+    return similarity._icos_topk(q.crossJoin(c), 5)
 
 
 SQL_EMBEDDING_TOPK = """
@@ -1953,39 +1937,19 @@ def q_embedding_ivf_topk(spark, sf):
     """IVF-bucketed ANN: candidates restricted to the same label cluster —
     the join is per-bucket (scale path), same quantized-cosine math. Cells
     above the max_bucket=2000 cap are dropped by the count + broadcast
-    anti-join prefilter (similarity._cap_cells — the LSH discipline; a
+    anti-join prefilter (pairs.cap_blocks — the LSH discipline; a
     skewed data-given cell would otherwise make Σ|cell|² unbounded),
     mirrored in the oracle's HAVING filter."""
-    emb = load(spark, sf, "embeddings")
-    oversize = (emb.groupBy("label").agg(F.count("*").alias("_sz"))
-                .filter(F.col("_sz") > 2000).select("label"))
-    emb = emb.join(F.broadcast(oversize), "label", "left_anti")
-    nrm = lambda col: F.aggregate(col, F.lit(0).cast("long"), lambda a, x: a + x * x)  # noqa: E731
+    emb = cap_blocks(load(spark, sf, "embeddings"), "label", 2000)
     q = emb.select(
         F.col("vec_id").alias("query_id"), _quantize(F.col("embedding")).alias("qv"),
         F.col("label").alias("_b"),
-    ).withColumn("qn", nrm(F.col("qv")))
+    ).withColumn("qn", similarity.inorm("qv"))
     c = emb.select(
         F.col("vec_id").alias("neighbor_id"), _quantize(F.col("embedding")).alias("cv"),
         F.col("label").alias("_b"),
-    ).withColumn("cn", nrm(F.col("cv")))
-    dot_ = F.aggregate(
-        F.zip_with("qv", "cv", lambda a, b: a * b), F.lit(0).cast("long"), lambda a, x: a + x
-    )
-    scored = (
-        q.join(c, "_b")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id", "neighbor_id",
-            (dot_.cast("double") / F.sqrt(F.col("qn").cast("double") * F.col("cn").cast("double"))).alias("cos_x"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_x"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "neighbor_id", F.round("cos_x", 6).alias("cos"), "rank")
-    )
+    ).withColumn("cn", similarity.inorm("cv"))
+    return similarity._icos_topk(q.join(c, "_b"), 3)
 
 
 SQL_EMBEDDING_IVF_TOPK = """
@@ -8754,26 +8718,18 @@ def q_embedding_int8_topk(spark, sf):
     production path composes int8 vectors with the IVF/LSH bucket
     joins."""
     from anomaly_detection_spark.functions.similarity import int8_quantize
-    from pyspark.sql.window import Window
 
-    emb = load(spark, sf, "embeddings").filter(
-        F.array_max(F.transform(
-            F.col("embedding"), lambda v: F.abs(v.cast("double")))) > 0)
-    nrm = lambda col: F.aggregate(  # noqa: E731
-        col, F.lit(0).cast("long"), lambda a, x: a + x * x)
+    emb = similarity.nonzero(load(spark, sf, "embeddings"))
     q = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"),
         int8_quantize(F.col("embedding")).alias("qv"),
-    ).withColumn("qn", nrm(F.col("qv")))
+    ).withColumn("qn", similarity.inorm("qv"))
     c = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         int8_quantize(F.col("embedding")).alias("cv"),
-    ).withColumn("cn", nrm(F.col("cv")))
-    dot = F.aggregate(
-        F.zip_with("qv", "cv", lambda a, b: a * b),
-        F.lit(0).cast("long"), lambda a, x: a + x)
+    ).withColumn("cn", similarity.inorm("cv"))
     cos_micro = F.floor(
-        dot.cast("double")
+        similarity.idot("qv", "cv").cast("double")
         / (F.sqrt(F.col("qn").cast("double"))
            * F.sqrt(F.col("cn").cast("double")))
         * F.lit(1e6) + F.lit(0.5)).cast("long")
@@ -8782,13 +8738,8 @@ def q_embedding_int8_topk(spark, sf):
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", cos_micro.alias("cos_micro"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_micro"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
+    return topk_per_query(scored, 3, score="cos_micro") \
         .orderBy("query_id", "rank")
-    )
 
 
 def q_embedding_spectral_top(spark, sf):
@@ -8885,10 +8836,8 @@ def q_embedding_spectral_multi(spark, sf):
     qz = e.select(
         "vec_id", "label", int8_quantize(F.col("embedding")).alias("qv"))
     dirs = spectral_top_directions(qz, n_components=3, iters=2)
-    d = F.aggregate(
-        F.zip_with("qv", "v", lambda a, b: a * b),
-        F.lit(0).cast("long"), lambda acc, x: acc + x)
-    proj = qz.crossJoin(F.broadcast(dirs)).withColumn("proj", d)
+    proj = qz.crossJoin(F.broadcast(dirs)) \
+        .withColumn("proj", similarity.idot("qv", "v"))
     return proj.groupBy("component", "label").agg(
         F.count(F.lit(1)).alias("n_vecs"),
         F.sum("proj").alias("sum_proj"),
@@ -9007,35 +8956,17 @@ def q_ann_recall_report(spark, sf):
     from anomaly_detection_spark.functions import similarity as sim
 
     emb = load(spark, sf, "embeddings")
-    nonzero = emb.filter(
-        F.array_max(F.transform(
-            F.col("embedding"), lambda v: F.abs(v.cast("double")))) > 0)
-    inrm = lambda col: F.aggregate(  # noqa: E731
-        col, F.lit(0).cast("long"), lambda a, x: a + x * x)
+    nonzero = sim.nonzero(emb)
     q = nonzero.filter(F.col("vec_id") < 100).select(
         F.col("vec_id").alias("query_id"),
         sim.int8_quantize(F.col("embedding")).alias("qv"),
-    ).withColumn("qn", inrm(F.col("qv")))
+    ).withColumn("qn", sim.inorm("qv"))
     c = nonzero.select(
         F.col("vec_id").alias("neighbor_id"),
         sim.int8_quantize(F.col("embedding")).alias("cv"),
-    ).withColumn("cn", inrm(F.col("cv")))
-    idot = F.aggregate(
-        F.zip_with("qv", "cv", lambda a, b: a * b),
-        F.lit(0).cast("long"), lambda a, x: a + x)
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id",
-                (idot.cast("double")
-                 / F.sqrt(F.col("qn").cast("double")
-                          * F.col("cn").cast("double"))).alias("cos_x"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_x"), F.asc("neighbor_id"))
-    truth = scored.withColumn("rank", F.row_number().over(w)) \
-        .filter(F.col("rank") <= 3).select("query_id", "neighbor_id") \
-        .localCheckpoint(eager=False)
+    ).withColumn("cn", sim.inorm("cv"))
+    truth = sim._icos_topk(q.crossJoin(c), 3) \
+        .select("query_id", "neighbor_id").localCheckpoint(eager=False)
     variants = [
         ("int8_ivf_np1", sim.int8_ivf_topk(emb, k=3, nprobe=1)),
         ("int8_ivf_np2", sim.int8_ivf_topk(emb, k=3, nprobe=2)),
@@ -9138,16 +9069,16 @@ WITH e AS (
         b.vec_id ASC) AS rank
     FROM e q JOIN e b ON q.vec_id < 100 AND q.vec_id <> b.vec_id
   ) WHERE rank <= 3
-), v1 AS (SELECT query_id, neighbor_id FROM ("""
+), v1 AS (SELECT DISTINCT query_id, neighbor_id FROM ("""
     + _int8_ivf_sql(1)
     + """) WHERE query_id < 100
-), v2 AS (SELECT query_id, neighbor_id FROM ("""
+), v2 AS (SELECT DISTINCT query_id, neighbor_id FROM ("""
     + _int8_ivf_sql(2)
     + """) WHERE query_id < 100
-), v3 AS (SELECT query_id, neighbor_id FROM ("""
+), v3 AS (SELECT DISTINCT query_id, neighbor_id FROM ("""
     + "{IVF_KMEANS}"
     + """) WHERE query_id < 100
-), v4 AS (SELECT query_id, neighbor_id FROM ("""
+), v4 AS (SELECT DISTINCT query_id, neighbor_id FROM ("""
     + "{LSH_MULTIPROBE}"
     + """) WHERE query_id < 100
 )

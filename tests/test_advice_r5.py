@@ -1,8 +1,9 @@
 """Regression tests for round-5 ADVICE findings: int64-overflow hazards in
 ewma_control's squared 3σ band and spectral_top_direction's renormalizing
 product, requiredness tightening masked by a simultaneous type widening,
-NULL zone-map envelopes mis-counted as pruned, and int-id wraparound in the
-line-dedup keeper encoding."""
+NULL zone-map envelopes mis-counted as pruned, int-id wraparound in the
+line-dedup keeper encoding, and ANN recall inflated by a variant that
+repeats a pair."""
 
 from __future__ import annotations
 
@@ -10,7 +11,8 @@ import pyspark.sql.functions as F
 
 from anomaly_detection_spark.functions import maintenance, repetition
 from anomaly_detection_spark.functions.schema_evo import schema_compat
-from anomaly_detection_spark.functions.similarity import spectral_top_direction
+from anomaly_detection_spark.functions.similarity import (
+    ann_recall, spectral_top_direction)
 from anomaly_detection_spark.functions.timeseries import ewma_control
 
 
@@ -93,3 +95,15 @@ def test_line_dedup_int_ids_above_2148_attribute_correctly(spark):
     assert got[2_000_000_000]["kept_lines"] == 0
     assert got[6000]["removed_lines"] == 1
     assert got[5000]["removed_tokens"] == 0
+
+
+def test_ann_recall_ignores_repeated_variant_pairs(spark):
+    """A variant frame that returns one (query, neighbor) pair twice must
+    count that true pair once: before the fix the left join multiplied
+    the truth row, inflating n_truth, n_hits and recall_ppm."""
+    pair = "query_id long, neighbor_id long"
+    truth = spark.createDataFrame([(1, 2), (1, 3), (2, 1)], pair)
+    variant = spark.createDataFrame([(1, 2), (1, 2), (1, 2), (2, 5)], pair)
+    r = ann_recall(truth, variant, "dup").first()
+    assert (r["n_queries"], r["n_truth"], r["n_hits"], r["recall_ppm"]) \
+        == (2, 3, 1, 333333)

@@ -1,12 +1,18 @@
-"""Bounded pair expansion: LSH bucket caps and co-activity key caps must
-drop exactly the degenerate groups (with observability) and change nothing
-else — the 100 TB quadratic-blowup guards."""
+"""Bounded pair expansion: the shared ``pairs.cap_blocks`` prefilter and
+every operator cap built on it (LSH buckets, co-activity keys, semantic-
+prune clusters, linkage blocks) must drop exactly the degenerate groups
+(with observability) and change nothing else — the 100 TB quadratic-
+blowup guards."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from anomaly_detection_spark.functions import dedup, graph
+from anomaly_detection_spark.functions.linkage import best_links
+from anomaly_detection_spark.functions.pairs import cap_blocks
+from anomaly_detection_spark.functions.similarity import semantic_prune
 
 
 def _docs(spark):
@@ -126,3 +132,75 @@ def test_registry_pair_query_unchanged_by_cap(spark):
         .limit(20).collect()
     ]
     assert got == want
+
+
+def _plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+
+
+# blocks on k: "a" holds exactly 3 rows, "b" 4, NULL 4; on (k, g): ("a", 0)
+# and ("b", 0) hold 2, ("a", 1) 1, ("b", 1) 2, (NULL, 0) 4
+_CAP_ROWS = [
+    (1, "a", 0), (2, "a", 0), (3, "a", 1),
+    (4, "b", 0), (5, "b", 0), (6, "b", 1), (7, "b", 1),
+    (8, None, 0), (9, None, 0), (10, None, 0), (11, None, 0),
+]
+
+
+@pytest.mark.parametrize("key, max_size, kept", [
+    # a block of exactly max_size rows is kept, max_size+1 is dropped;
+    # NULL keys never match the anti-join, so their rows pass
+    ("k", 3, {1, 2, 3, 8, 9, 10, 11}),
+    ("k", 4, set(range(1, 12))),
+    # multi-column key (the co_activity_pairs shape); a NULL component
+    # also never matches
+    (["k", "g"], 1, {3, 8, 9, 10, 11}),
+    (["k", "g"], 2, set(range(1, 12))),
+    # None opts out
+    ("k", None, set(range(1, 12))),
+])
+def test_cap_blocks(spark, key, max_size, kept):
+    df = spark.createDataFrame(_CAP_ROWS, "id int, k string, g int")
+    out = cap_blocks(df, key, max_size)
+    assert {r["id"] for r in out.collect()} == kept
+    if max_size is None:
+        assert out is df
+        return
+    plan = _plan(out)
+    assert "LeftAnti" in plan and "Broadcast" in plan
+    assert "SortMergeJoin" not in plan
+
+
+def test_semantic_prune_cap_with_null_bucket(spark):
+    """Bucket 0 holds 3 identical vectors, bucket 1 two, the NULL bucket
+    two: a cap of 2 drops bucket 0 only, and NULL-bucket vectors are never
+    paired (the per-bucket equi-join cannot match NULL)."""
+    rows = [(i, [1.0, 0.0], 0) for i in (1, 2, 3)]
+    rows += [(i, [0.0, 1.0], 1) for i in (4, 5)]
+    rows += [(i, [1.0, 1.0], None) for i in (6, 7)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
+    got = {(r["vec_id"], r["bucket"], r["canonical_id"])
+           for r in semantic_prune(emb, threshold=0.9, max_bucket=2).collect()}
+    assert got == {(5, 1, 4)}
+    full = {(r["vec_id"], r["canonical_id"])
+            for r in semantic_prune(emb, threshold=0.9, max_bucket=3).collect()}
+    assert full == {(2, 1), (3, 1), (5, 4)}
+
+
+def test_best_links_cap_with_null_block(spark):
+    """Clean block "x" holds 2 records, "y" 3, the NULL block 1: a cap of
+    2 leaves "y" un-linkable, and a NULL-block dirty record never links."""
+    clean = spark.createDataFrame(
+        [(1, "anna smith", "x"), (2, "bob jones", "x"),
+         (3, "carl white", "y"), (4, "dora black", "y"), (5, "eve green", "y"),
+         (6, "fred brown", None)],
+        "rec_id long, name string, blk string")
+    dirty = spark.createDataFrame(
+        [(11, "ANNA SMITH", "x"), (13, "carl whit", "y"), (16, "fred brown", None)],
+        "rec_id long, name string, blk string")
+    capped = {tuple(r) for r in best_links(dirty, clean, ["blk"], max_block=2).collect()}
+    assert capped == {(11, 1, 1000000)}
+    full = {r["dirty_id"]: r["clean_id"]
+            for r in best_links(dirty, clean, ["blk"], max_block=3).collect()}
+    assert full == {11: 1, 13: 3}
